@@ -37,11 +37,13 @@ partitions present in the incoming batch — no full rewrite at 100 TB.
 
 from __future__ import annotations
 
-import os
 import uuid
 
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from nomba_data_pipeline_spark import localmeta
 
 
 def fs_and_path(spark: SparkSession, p: str):
@@ -157,7 +159,7 @@ class ParquetTable:
             spark.conf.set(
                 "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
             )
-        except Exception:
+        except PySparkException:
             pass  # conf locked down (e.g. Connect policy) — writes still work
 
     # -- filesystem plumbing -------------------------------------------------
@@ -211,90 +213,42 @@ class ParquetTable:
         difference between a metadata read and rescanning the fact's
         tracking column on every refresh.
 
-        Exactness guard: string stats may be TRUNCATED by writers
-        (parquet allows bound prefixes), so only numeric / date /
-        timestamp columns use the stats path; anything else — or a
-        non-locally-readable filesystem, or any file missing stats —
-        falls back to the exact scan agg. On object stores the same
-        footer reads are range requests (cheap); this implementation
-        reads them with pyarrow and therefore gates on local paths,
-        falling back to the scan elsewhere.
+        Falls back to the exact scan agg (high_water_mark) in exactly
+        these cases, all decided by localmeta: the table is not on a
+        local filesystem, a footer cannot be opened (OSError /
+        ArrowException), the column's type has no exact stats (string
+        bounds may be writer-truncated), the column is absent from the
+        data files (a partition column), or a non-empty file lacks
+        min/max. Timestamps come back UTC-naive, matching the
+        catalog's pinned UTC session.
         """
         if not self.exists():
             return None
-        local = self.path
-        if local.startswith("file:"):
-            local = local[len("file:"):]
-        if "://" in local or not os.path.isdir(local):
+        footers = localmeta.read_footers(self.path, [tracking_col])
+        if footers is None:
             return self.high_water_mark(tracking_col)
-        try:
-            import datetime
-            import glob as _glob
-
-            import pyarrow.parquet as _pq
-
-            files = sorted(
-                _glob.glob(os.path.join(local, "**", "*.parquet"), recursive=True)
-            )
-            if not files:
+        best = None
+        for footer in footers:
+            if footer.rows == 0:
+                continue
+            st = footer.stats[tracking_col]
+            if st is None:
                 return self.high_water_mark(tracking_col)
-            best = None
-            for f in files:
-                md = _pq.ParquetFile(f).metadata
-                try:
-                    idx = md.schema.names.index(tracking_col)
-                except ValueError:  # partition column — not in data files
-                    return self.high_water_mark(tracking_col)
-                typ = md.schema.column(idx).logical_type.type
-                phys = md.schema.column(idx).physical_type
-                stats_safe = phys in (
-                    "INT32", "INT64", "FLOAT", "DOUBLE",
-                ) or typ in ("TIMESTAMP", "DATE", "DECIMAL")
-                if not stats_safe:
-                    return self.high_water_mark(tracking_col)
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(idx).statistics
-                    if st is None or not st.has_min_max:
-                        return self.high_water_mark(tracking_col)
-                    v = st.max
-                    if isinstance(v, datetime.datetime) and v.tzinfo is not None:
-                        # Spark returns session-tz-naive datetimes; the
-                        # runner compares via F.lit, which accepts aware
-                        # datetimes too — normalize to UTC-naive to
-                        # match the catalog's pinned UTC session
-                        v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
-                    best = v if best is None else max(best, v)
-            return best
-        except Exception:  # any footer surprise → exact scan
-            return self.high_water_mark(tracking_col)
+            best = st[1] if best is None else max(best, st[1])
+        return best
 
     def row_count_stats(self) -> int | None:
         """Total row count from parquet FOOTER metadata — zero data scan,
-        zero Spark jobs on local layouts (same pyarrow footer walk as
-        high_water_mark_stats). Returns None when the table is absent;
-        falls back to a Spark count() on non-local schemes or any footer
-        surprise. Exact by construction: parquet footers record num_rows
-        per file."""
+        zero Spark jobs on local layouts (footers record num_rows per
+        file, so this is exact). Returns None when the table is absent;
+        counts with Spark when the table is not local or a footer
+        cannot be opened (OSError / ArrowException)."""
         if not self.exists():
             return None
-        local = self.path
-        if local.startswith("file:"):
-            local = local[len("file:"):]
-        if "://" in local or not os.path.isdir(local):
+        footers = localmeta.read_footers(self.path, [])
+        if footers is None:
             return self.read().count()
-        try:
-            import glob as _glob
-
-            import pyarrow.parquet as _pq
-
-            files = sorted(
-                _glob.glob(os.path.join(local, "**", "*.parquet"), recursive=True)
-            )
-            if not files:
-                return self.read().count()
-            return sum(_pq.ParquetFile(f).metadata.num_rows for f in files)
-        except Exception:  # any footer surprise → exact count
-            return self.read().count()
+        return sum(f.rows for f in footers)
 
     # -- write modes ---------------------------------------------------------
     def overwrite(self, df: DataFrame, partition_by: list[str] | None = None) -> None:

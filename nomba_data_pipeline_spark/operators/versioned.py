@@ -74,14 +74,18 @@ from __future__ import annotations
 
 import datetime as _dt
 import json
-import os
 import re
+import shutil
 import uuid
+from zoneinfo import ZoneInfo, ZoneInfoNotFoundError
 
+from pyarrow import ArrowException
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from nomba_data_pipeline_spark import localmeta
 from nomba_data_pipeline_spark.operators.merge import (
     ParquetTable,
     _align_to_target,
@@ -89,192 +93,84 @@ from nomba_data_pipeline_spark.operators.merge import (
     fs_and_path,
 )
 
-# per-file stats are only recorded for types whose parquet footer
-# min/max are exact (string bounds may be writer-truncated — same
-# exactness guard as ParquetTable.high_water_mark_stats)
-_STATS_SAFE_PREFIXES = (
-    "int", "bigint", "smallint", "tinyint", "float", "double",
-    "date", "timestamp", "decimal",
-)
-
-
-def _stats_safe(dtype: str) -> bool:
-    return dtype.startswith(_STATS_SAFE_PREFIXES)
-
-
-def _local_dir(p: str) -> str | None:
-    """OS path when `p` is handled on the driver's LOCAL filesystem,
-    else None (caller falls back to the Hadoop/Spark path). `file:`
-    URIs are local by definition; a scheme-qualified anything else
-    (hdfs://, s3a://) never is; a scheme-less path counts only when
-    its PARENT directory exists locally — on a cluster whose default
-    FS is HDFS that probe fails and the Hadoop path is used, so this
-    fast path can never misroute metadata to the wrong filesystem."""
-    if p.startswith("file:"):
-        q = p[len("file:"):]
-        while q.startswith("//"):  # file:/// form
-            q = q[1:]
-        return q
-    if "://" in p:
-        return None
-    return p if os.path.isdir(os.path.dirname(p)) else None
-
-
-def _write_json_dir_local(d: str, payload, col: str = "j") -> None:
-    """Driver-side twin of the Spark 1-row-parquet JSON write: same
-    directory shape (one `*.parquet` part file + `_SUCCESS`), same
-    single string column (`j` for versioned metadata; the IVM sidecars
-    use `meta`), so Spark and pyarrow readers mix freely with the
-    Spark-written form. makedirs without exist_ok: the tmp name is
-    uuid-fresh, and failing on an impossible collision is safer than
-    writing into someone else's directory."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(d)
-    pq.write_table(
-        pa.table({col: [json.dumps(payload)]}),
-        os.path.join(d, f"part-00000-{uuid.uuid4().hex}.parquet"),
-    )
-    with open(os.path.join(d, "_SUCCESS"), "w"):
-        pass
-
-
 def read_json_sidecar(spark: SparkSession, p: str, col: str = "j"):
-    """Read a 1-row JSON parquet sidecar, pyarrow-fast on local
-    filesystems (microseconds, zero Spark jobs), Spark reader
-    otherwise — the r15 metadata fast path (OPTIMIZATION_r15 §2),
-    shared by the versioned table and the IVM sidecars
-    (JoinViewTable/AggJoinView `._view_meta`/`._agg_meta`/intents)."""
-    local = _local_dir(p)
-    if local is not None and os.path.isdir(local):
-        try:
-            import pyarrow as _pa
-            import pyarrow.parquet as _pq
-        except ImportError:
-            _pa = None
-        if _pa is not None:
-            import glob as _glob
+    """Read a 1-row JSON parquet sidecar (localmeta.json_table format):
+    pyarrow on local filesystems (zero Spark jobs), the Spark reader
+    elsewhere. Shared by the versioned table and the IVM sidecars
+    (JoinViewTable/AggJoinView `._view_meta`/`._agg_meta`/intents,
+    the runner's `._view_state`). A missing or damaged sidecar raises
+    one of SIDECAR_READ_ERRORS."""
+    local = localmeta.local_path(p)
+    if local is None:
+        return localmeta.json_payload(spark.read.parquet(p).toArrow(), col)
+    return localmeta.read_json_dir(local, col)
 
-            files = _glob.glob(os.path.join(local, "*.parquet"))
-            # require the _SUCCESS commit marker: a hand-copied partial
-            # directory (one part file, no marker) goes to the Spark
-            # reader rather than being silently accepted here
-            if len(files) == 1 and os.path.exists(
-                os.path.join(local, "_SUCCESS")
-            ):
-                # narrow except (ADVICE r15): only storage/format errors
-                # fall back to Spark — a genuinely corrupt JSON payload
-                # (json.loads below) raises the same way on either path,
-                # so retrying it through Spark would just re-fail slower
-                # with a vaguer error
-                try:
-                    payload = (
-                        _pq.read_table(files[0], columns=[col])
-                        .column(col)[0]
-                        .as_py()
-                    )
-                except (OSError, KeyError, IndexError, _pa.lib.ArrowInvalid):
-                    payload = None
-                if payload is not None:
-                    return json.loads(payload)
-    return json.loads(spark.read.parquet(p).first()[col])
+
+# localmeta.SIDECAR_ERRORS, plus what the Spark reader raises off-local
+SIDECAR_READ_ERRORS = localmeta.SIDECAR_ERRORS + (PySparkException,)
 
 
 def write_json_sidecar(spark: SparkSession, p: str, payload, col: str = "j") -> None:
     """Write a 1-row JSON parquet sidecar with the same temp+atomic-swap
-    crash contract as ParquetTable.overwrite, pyarrow-fast on local
-    filesystems, Spark writer otherwise. Bytes on disk are identical
-    either way, so the two paths mix freely across writers/readers."""
-    local = _local_dir(p)
-    if local is not None:
-        tmp = f"{p}.tmp-{uuid.uuid4().hex[:8]}"
-        try:
-            _write_json_dir_local(_local_dir(tmp), payload, col=col)
-        except Exception:
-            _rm_local_dir(_local_dir(tmp))
-        else:
-            ParquetTable(spark, p)._swap_in(tmp)
-            return
-    ParquetTable(spark, p).overwrite(
-        spark.createDataFrame([(json.dumps(payload),)], f"{col} string").coalesce(1)
-    )
+    crash contract as ParquetTable.overwrite: pyarrow on local
+    filesystems, the Spark writer elsewhere. Both produce the
+    localmeta.json_table format, so they mix freely."""
+    tmp = f"{p}.tmp-{uuid.uuid4().hex[:8]}"
+    _stage_json_sidecar(spark, tmp, payload, col)
+    ParquetTable(spark, p)._swap_in(tmp)
+
+
+def _stage_json_sidecar(spark: SparkSession, d: str, payload, col: str = "j") -> None:
+    """Write a JSON sidecar into the NEW directory `d`."""
+    table = localmeta.json_table(payload, col)
+    _stage_sidecar(spark, d, lambda: table, lambda: spark.createDataFrame(table))
 
 
 def read_table_sidecar_local(p: str):
-    """pyarrow fast path for a small TYPED sidecar table (ANN index
-    params/centroids and friends): the whole table when `p` is a local
-    single-part parquet dir, None otherwise — the caller falls back to
-    the Spark reader. Zero Spark jobs on the fast path."""
-    local = _local_dir(p)
-    if local is None or not os.path.isdir(local):
-        return None
-    try:
-        import glob as _glob
-
-        import pyarrow.parquet as _pq
-
-        files = _glob.glob(os.path.join(local, "*.parquet"))
-        if len(files) != 1:
-            return None
-        return _pq.read_table(files[0])
-    except Exception:
-        return None
+    """The whole small TYPED sidecar table (ANN index params/centroids
+    and friends) read with pyarrow when `p` is local — zero Spark jobs;
+    None elsewhere, and the caller uses the Spark reader."""
+    local = localmeta.local_path(p)
+    return None if local is None else localmeta.read_sidecar_dir(local)
 
 
 def write_table_sidecar(spark: SparkSession, p: str, make_arrow, make_spark_df) -> None:
-    """Write a small typed sidecar table with the same temp+atomic-swap
-    contract as the JSON sidecars: pyarrow on local filesystems (zero
-    Spark jobs), the Spark writer otherwise. `make_arrow` returns a
-    pyarrow Table and `make_spark_df` the equivalent 1-partition
-    DataFrame — the two must carry IDENTICAL schemas (arrow int32 for a
-    Spark int, list_(float64) for array<double>) so readers mix freely
-    across the two written forms."""
-    local = _local_dir(p)
-    if local is not None:
-        tmp = f"{p}.tmp-{uuid.uuid4().hex[:8]}"
-        try:
-            import pyarrow.parquet as _pq
-
-            d = _local_dir(tmp)
-            os.makedirs(d)
-            _pq.write_table(
-                make_arrow(),
-                os.path.join(d, f"part-00000-{uuid.uuid4().hex}.parquet"),
-            )
-            with open(os.path.join(d, "_SUCCESS"), "w"):
-                pass
-        except Exception:
-            _rm_local_dir(_local_dir(tmp))
-        else:
-            ParquetTable(spark, p)._swap_in(tmp)
-            return
-    # non-local fallback honors the same temp+atomic-swap contract as
-    # the fast path (ADVICE r15): a crash mid-write must leave the
-    # previous sidecar readable, never a deleted/partial directory
-    ParquetTable(spark, p).overwrite(make_spark_df().coalesce(1))
+    """Write a small typed sidecar table: staged into a temp directory,
+    then atomically swapped in, so a crash mid-write leaves the
+    previous sidecar readable. `make_arrow` returns a pyarrow Table and
+    `make_spark_df` the equivalent DataFrame — the two must carry
+    IDENTICAL schemas (arrow int32 for a Spark int, list_(float64) for
+    array<double>) so readers mix freely across the two written forms."""
+    tmp = f"{p}.tmp-{uuid.uuid4().hex[:8]}"
+    _stage_sidecar(spark, tmp, make_arrow, make_spark_df)
+    ParquetTable(spark, p)._swap_in(tmp)
 
 
-def _rm_local_dir(d: str | None) -> None:
-    if d:
-        import shutil
+def _stage_sidecar(spark: SparkSession, d: str, make_arrow, make_spark_df) -> None:
+    """Write a small table into the NEW directory `d`: pyarrow when `d`
+    is local (zero Spark jobs), the Spark writer elsewhere."""
+    local = localmeta.local_path(d)
+    if local is None:
+        make_spark_df().coalesce(1).write.mode("error").parquet(d)
+        return
+    try:
+        localmeta.write_sidecar_dir(local, make_arrow())
+    except (OSError, ArrowException):
+        shutil.rmtree(local, ignore_errors=True)
+        raise
 
-        shutil.rmtree(d, ignore_errors=True)
 
-
-def _stat_str(v) -> str:
-    """Canonical string rendering for a manifest stat value.
-
-    pyarrow decodes Spark timestamp footer stats as TZ-AWARE datetimes
-    (str() renders '...+00:00'), while callers of read_range /
-    high_water_mark_str pass session-naive renderings — the lexical
-    comparison in _ranges_intersect and the HWM round-trip would only
-    line up under the repo's pinned-UTC session. Normalize to UTC-naive
-    before rendering (mirroring merge.high_water_mark_stats) so the
-    comparison is correct by construction, not by session config."""
-    if isinstance(v, _dt.datetime) and v.tzinfo is not None:
-        v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-    return str(v)
+def _manifest_stats(footer: localmeta.Footer | None) -> dict | None:
+    """A file's manifest stats entry from its footer: {col: [lo, hi]}
+    rendered with str() — the canonical form, JSON-portable and
+    compared against str(value) bounds in read_range (footer timestamps
+    arrive UTC-naive, so the lexical comparison holds under any session
+    time zone). None when nothing is known."""
+    if footer is None:
+        return None
+    out = {c: [str(v[0]), str(v[1])]
+           for c, v in footer.stats.items() if v is not None}
+    return out or None
 
 
 # simple-comparison conjunct for _predicate_bounds: col OP literal,
@@ -298,7 +194,7 @@ def _norm_ts_literal(lit: str, dtype: str, session_tz: str) -> str | None:
     purge_where). Parse the literal (offset-aware), convert to UTC the
     way Spark evaluates the predicate (a naive `timestamp` literal is
     session wall time; `timestamp_ntz` and `date` shift nothing), and
-    render via _stat_str. Returns None when the literal does not parse
+    render with str(). Returns None when the literal does not parse
     or the session zone cannot be resolved — contributing no bound is
     always safe, a wrong bound never is."""
     s = lit.strip().replace("T", " ")
@@ -316,13 +212,11 @@ def _norm_ts_literal(lit: str, dtype: str, session_tz: str) -> str | None:
     elif dtype == "timestamp":
         # naive literal = session wall time; stats are UTC-naive
         try:
-            from zoneinfo import ZoneInfo
-
             v = (v.replace(tzinfo=ZoneInfo(session_tz))
                  .astimezone(_dt.timezone.utc).replace(tzinfo=None))
-        except Exception:
+        except (ZoneInfoNotFoundError, ValueError):
             return None
-    return _stat_str(v)
+    return str(v)
 
 
 class ConstraintViolation(ValueError):
@@ -388,17 +282,13 @@ class VersionedTable:
     def _fs(self, p: str):
         return fs_and_path(self.spark, p)
 
-    # -- pointer / manifest IO (1-row parquet, atomic swap — the same
-    # sidecar pattern JoinViewTable._write_meta documents: a crash
-    # mid-write must leave the previous bytes readable). On LOCAL
-    # layouts both directions go through pyarrow on the driver —
-    # the same footer-walk precedent as high_water_mark_stats and the
-    # versioned_cdf stream source (which already reads these dirs with
-    # pq.read_table) — so pointer/manifest metadata costs microseconds
-    # instead of one Spark job per access; non-local schemes and any
-    # surprise fall back to the Spark reader/writer unchanged. The
-    # bytes on disk are identical either way (1-row parquet, column
-    # `j`), so readers and writers mix freely across the two paths. --
+    # -- pointer / manifest IO: JSON sidecars (localmeta.json_table,
+    # column `j`) behind an atomic swap, so a crash mid-write leaves the
+    # previous bytes readable. Local layouts read and write them with
+    # pyarrow on the driver (microseconds, no Spark job); non-local
+    # schemes use the Spark reader/writer. A local read or write error
+    # (OSError / ArrowException) raises — it is never retried through
+    # Spark. --
     def _read_json(self, p: str) -> dict:
         return read_json_sidecar(self.spark, p)
 
@@ -440,10 +330,8 @@ class VersionedTable:
         # untouched — only pointer copies die here).
         def _backup_version(p) -> int:
             try:
-                return int(json.loads(
-                    self.spark.read.parquet(p.toString()).first()["j"]
-                )["version"])
-            except Exception:
+                return int(self._read_json(p.toString())["version"])
+            except SIDECAR_READ_ERRORS:
                 return -1
 
         best = max(backups, key=_backup_version)
@@ -537,10 +425,10 @@ class VersionedTable:
             df = df.repartition(target_files)
         want = self._stats_targets(df.schema)
         obs = None
-        if want and not cluster_by and not self._footers_reachable():
-            # only where the footer fast path CANNOT work — on local
-            # filesystems the observation would be per-row aggregate
-            # work in the hot CDC write path whose result is discarded
+        if want and not cluster_by and localmeta.local_path(self.path) is None:
+            # only where footers are not local — there the observation
+            # would be per-row aggregate work in the hot CDC write path
+            # whose result is discarded
             obs = Observation()
             exprs = []
             for c in want:
@@ -559,11 +447,13 @@ class VersionedTable:
             if st.getPath().getName().endswith(".parquet")
         )
         rels = [r for r, _ in sized]
-        stats = {r: self._file_stats(f"{self.path}/{r}", want) for r in rels}
-        # per-file ROW COUNTS (Delta's numRecords): footer metadata on
-        # local schemes — row_count() then answers COUNT(*) from the
-        # manifest alone, zero scan
-        nrows = {r: self._file_rows(f"{self.path}/{r}") for r in rels}
+        # per-file min/max and ROW COUNTS (Delta's numRecords) from the
+        # footers on local schemes — read_range prunes and row_count()
+        # answers COUNT(*) from the manifest alone, zero scan
+        footers = {r: localmeta.read_footer(f"{self.path}/{r}", want)
+                   for r in rels}
+        stats = {r: _manifest_stats(footers[r]) for r in rels}
+        nrows = {r: footers[r].rows if footers[r] else None for r in rels}
         if want and any(v is None for v in stats.values()):
             if obs is not None:
                 # generation-wide bounds from the write's own
@@ -578,8 +468,8 @@ class VersionedTable:
                     }
             else:
                 # clustered generation (per-file tightness is the
-                # point), or a local-FS footer miss (pyarrow absent /
-                # a file without usable min-max): ONE read-back
+                # point), or a local file without usable footer
+                # min/max: ONE read-back
                 # aggregation over the generation just written
                 # (page-cache warm, O(generation) — never O(table))
                 rb_stats, rb_rows = self._stats_readback(gen, want, df.schema)
@@ -601,35 +491,18 @@ class VersionedTable:
         dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
         try:
             vals = obs.get
-            out = {}
-            for c in cols:
-                lo, hi = vals.get(f"lo_{c}"), vals.get(f"hi_{c}")
-                if lo is None:
-                    continue
-                lo_s = self._delta_stat_str(lo, dtypes.get(c, ""))
-                hi_s = self._delta_stat_str(hi, dtypes.get(c, ""))
-                if lo_s is not None and hi_s is not None:
-                    out[c] = [lo_s, hi_s]
-            return out or None
-        except Exception:
+        except PySparkException:
             return None  # stats stay an optimization, never a dependency
-
-    def _file_rows(self, abs_path: str) -> int | None:
-        """A file's row count from the parquet FOOTER (no data scan)
-        — local filesystems only, same reachability rule as
-        _file_stats; None elsewhere (the readback pass fills it on
-        footer-less schemes)."""
-        local = abs_path
-        if local.startswith("file:"):
-            local = local[len("file:"):]
-        if "://" in local or not os.path.isfile(local):
-            return None
-        try:
-            import pyarrow.parquet as _pq
-
-            return int(_pq.ParquetFile(local).metadata.num_rows)
-        except Exception:
-            return None
+        out = {}
+        for c in cols:
+            lo, hi = vals.get(f"lo_{c}"), vals.get(f"hi_{c}")
+            if lo is None:
+                continue
+            lo_s = self._delta_stat_str(lo, dtypes.get(c, ""))
+            hi_s = self._delta_stat_str(hi, dtypes.get(c, ""))
+            if lo_s is not None and hi_s is not None:
+                out[c] = [lo_s, hi_s]
+        return out or None
 
     def row_count(self, version: int | None = None) -> int:
         """COUNT(*) from the MANIFEST alone (Delta's numRecords): the
@@ -647,15 +520,6 @@ class VersionedTable:
         return self._read_files(
             man, [f["path"] for f in man["files"]]
         ).count()
-
-    def _footers_reachable(self) -> bool:
-        """Whether _file_stats' pyarrow footer fast path can work for
-        this table: local paths only (plain or file:-scheme) — the
-        same reachability rule _file_stats itself applies."""
-        p = self.path
-        if p.startswith("file:"):
-            return True
-        return "://" not in p
 
     def _stats_readback(
         self, gen: str, cols: list[str], schema: StructType,
@@ -676,80 +540,40 @@ class VersionedTable:
         — the same grouped pass yields both, so COUNT(*)-from-metadata
         stays available off local filesystems too."""
         dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
+        aggs = [F.count(F.lit(1)).alias("__n")]
+        for c in cols:
+            aggs += [F.min(c).alias(f"__lo_{c}"), F.max(c).alias(f"__hi_{c}")]
         try:
-            aggs = [F.count(F.lit(1)).alias("__n")]
-            for c in cols:
-                aggs += [F.min(c).alias(f"__lo_{c}"), F.max(c).alias(f"__hi_{c}")]
             rows = (
                 self.spark.read.schema(schema).parquet(gen)
                 .groupBy(F.input_file_name().alias("__f"))
                 .agg(*aggs)
                 .collect()
             )
-            out: dict[str, dict | None] = {}
-            counts: dict[str, int] = {}
-            for r in rows:
-                st = {}
-                for c in cols:
-                    lo, hi = r[f"__lo_{c}"], r[f"__hi_{c}"]
-                    if lo is not None:
-                        lo_s = self._delta_stat_str(lo, dtypes.get(c, ""))
-                        hi_s = self._delta_stat_str(hi, dtypes.get(c, ""))
-                        if lo_s is not None and hi_s is not None:
-                            st[c] = [lo_s, hi_s]
-                rel = self._rel(r["__f"])
-                out[rel] = st or None
-                counts[rel] = int(r["__n"])
-            return out, counts
-        except Exception:
-            # stats stay an optimization, never a dependency
-            return None, None
+        except PySparkException:
+            return None, None  # stats stay an optimization, never a dependency
+        out: dict[str, dict | None] = {}
+        counts: dict[str, int] = {}
+        for r in rows:
+            st = {}
+            for c in cols:
+                lo, hi = r[f"__lo_{c}"], r[f"__hi_{c}"]
+                if lo is not None:
+                    lo_s = self._delta_stat_str(lo, dtypes.get(c, ""))
+                    hi_s = self._delta_stat_str(hi, dtypes.get(c, ""))
+                    if lo_s is not None and hi_s is not None:
+                        st[c] = [lo_s, hi_s]
+            rel = self._rel(r["__f"])
+            out[rel] = st or None
+            counts[rel] = int(r["__n"])
+        return out, counts
 
     def _stats_targets(self, schema: StructType) -> list[str]:
         cols = [f.name for f in schema.fields
-                if _stats_safe(f.dataType.simpleString())]
+                if localmeta.exact_stats(f.dataType.simpleString())]
         if self.stats_cols is not None:
             cols = [c for c in cols if c in self.stats_cols]
         return cols
-
-    def _file_stats(self, abs_path: str, cols: list[str]):
-        """Per-file min/max from the parquet FOOTER — no data scan.
-        Local filesystems only (pyarrow path), like
-        high_water_mark_stats: elsewhere stats are simply omitted and
-        read_range keeps the file (pruning is an optimization, never a
-        correctness dependency)."""
-        if not cols:
-            return None
-        local = abs_path
-        if local.startswith("file:"):
-            local = local[len("file:"):]
-        if "://" in local or not os.path.isfile(local):
-            return None
-        try:
-            import pyarrow.parquet as _pq
-
-            md = _pq.ParquetFile(local).metadata
-            out = {}
-            for c in cols:
-                try:
-                    idx = md.schema.names.index(c)
-                except ValueError:
-                    continue
-                lo = hi = None
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(idx).statistics
-                    if st is None or not st.has_min_max:
-                        lo = hi = None
-                        break
-                    lo = st.min if lo is None else min(lo, st.min)
-                    hi = st.max if hi is None else max(hi, st.max)
-                if lo is not None:
-                    # JSON-portable; compared against str(value) bounds
-                    # in read_range, exact for the stats-safe types
-                    out[c] = [_stat_str(lo), _stat_str(hi)]
-            return out or None
-        except Exception:
-            return None
 
     # sentinel: "caller took no snapshot" (first-write overwrite) vs a
     # genuine expected parent of None
@@ -884,8 +708,7 @@ class VersionedTable:
         happened (its manifest is an orphan above the pointer), and the
         retry correctly proceeds from the surviving parent."""
         tmp = f"{self.path}/_manifests/.tmp-{uuid.uuid4().hex[:8]}"
-        (self.spark.createDataFrame([(json.dumps(man),)], "j string")
-         .coalesce(1).write.mode("error").parquet(tmp))
+        _stage_json_sidecar(self.spark, tmp, man)
         fs, tgt = self._fs(self._manifest_dir(v))
         _, tp = self._fs(tmp)
         ok = False
@@ -1271,7 +1094,7 @@ class VersionedTable:
         dtypes = self._schema_dtypes(man)
         targets = [
             k for k in keys
-            if k in delta.columns and _stats_safe(dtypes.get(k, ""))
+            if k in delta.columns and localmeta.exact_stats(dtypes.get(k, ""))
         ]
         if not targets:
             return {}
@@ -1371,7 +1194,7 @@ class VersionedTable:
                 continue  # unparsed conjunct: narrows rows, no bound
             col, op, lit = m.group(1), m.group(2), m.group(3).strip()
             dtype = dtypes.get(col, "")
-            if not _stats_safe(dtype):
+            if not localmeta.exact_stats(dtype):
                 continue
             if dtype.startswith(("timestamp", "date")):
                 # re-render the literal in the stats' canonical UTC-naive
@@ -1405,13 +1228,11 @@ class VersionedTable:
         if isinstance(v, _dt.datetime) and v.tzinfo is None and dtype == "timestamp":
             tz = self.spark.conf.get("spark.sql.session.timeZone")
             try:
-                from zoneinfo import ZoneInfo
-
                 v = (v.replace(tzinfo=ZoneInfo(tz))
                      .astimezone(_dt.timezone.utc).replace(tzinfo=None))
-            except Exception:
+            except (ZoneInfoNotFoundError, ValueError):
                 return None
-        return _stat_str(v)
+        return str(v)
 
     def _bounded_candidate_files(self, man: dict,
                                  bounds: dict[str, tuple]) -> list[str]:
@@ -1718,11 +1539,11 @@ class VersionedTable:
                     best = max(best, hi)
             if stats_ok and best is not None:
                 return best
-        except Exception:
+        except ValueError:
             # e.g. a decimal column whose footer stats an older pyarrow
-            # left as undecoded bytes — float() would raise. Stats are
-            # an optimization, never a correctness dependency: any
-            # parse surprise falls back to the exact scan below.
+            # left as undecoded bytes — float() cannot parse them.
+            # Stats are an optimization, never a correctness
+            # dependency: fall back to the exact scan below.
             pass
         row = self.read().agg(F.max(tracking_col).alias("m")).first()
         return None if row is None or row["m"] is None else str(row["m"])
@@ -1825,14 +1646,6 @@ class VersionedTable:
         res = self.vacuum(retain_last=1)
         return {"purged_version": v, **res}
 
-    @staticmethod
-    def _strip_scheme(p: str) -> str:
-        if p.startswith("file:"):
-            p = p[len("file:"):]
-            while p.startswith("//"):  # file:/// form
-                p = p[1:]
-        return p
-
     def _abs(self, entry_path: str) -> str:
         """A manifest entry's readable location. Ordinary entries are
         TABLE-RELATIVE (`_gen/g-*/part-*.parquet`); a SHALLOW CLONE's
@@ -1850,11 +1663,11 @@ class VersionedTable:
         absolute path for a shallow clone's referenced source files
         (so touched-set membership tests line up with the manifest's
         own entry strings either way)."""
-        p = self._strip_scheme(abs_uri)
+        p = localmeta.strip_file_scheme(abs_uri)
         i = p.find("/_gen/")
         if i < 0:
             raise ValueError(f"file {abs_uri} is not under a _gen root")
-        if p[:i] == self._strip_scheme(self.path):
+        if p[:i] == localmeta.strip_file_scheme(self.path):
             return p[i + 1:]
         return p  # a clone's referenced source file: absolute entry
 
@@ -1991,7 +1804,7 @@ class VersionedTable:
                 out.append(
                     (name, self._read_json(f"{self.path}/_clones/{name}"))
                 )
-            except Exception:
+            except SIDECAR_READ_ERRORS:
                 continue
         return out
 

@@ -146,24 +146,23 @@ class _PagedJsonBase:
         # one Arrow RecordBatch per page (guide §4.2): the JSON decode
         # and HWM filter are per-line Python either way, but the rows
         # cross the Python->JVM boundary as ONE columnar batch instead
-        # of pickled tuples. Falls back to tuple rows on any Arrow
-        # surprise — identical semantics.
-        rows = list(self._decoded_rows(partition.value))
-        try:
-            import pyarrow as pa
+        # of pickled tuples. The schema is limited to bigint/double/
+        # string (enforced at construction) and _CASTS makes every value
+        # an int/float/str/None of its column's type; an int beyond
+        # int64 raises here, as it would in Spark's LongType.
+        import pyarrow as pa
 
-            _ARROW = {"bigint": pa.int64(), "double": pa.float64(),
-                      "string": pa.string()}
-            cols = [
-                pa.array([r[i] for r in rows],
-                         type=_ARROW[f.dataType.simpleString()])
-                for i, f in enumerate(self.schema.fields)
-            ]
-            yield pa.RecordBatch.from_arrays(
-                cols, names=[f.name for f in self.schema.fields]
-            )
-        except Exception:
-            yield from iter(rows)
+        rows = list(self._decoded_rows(partition.value))
+        _ARROW = {"bigint": pa.int64(), "double": pa.float64(),
+                  "string": pa.string()}
+        cols = [
+            pa.array([r[i] for r in rows],
+                     type=_ARROW[f.dataType.simpleString()])
+            for i, f in enumerate(self.schema.fields)
+        ]
+        yield pa.RecordBatch.from_arrays(
+            cols, names=[f.name for f in self.schema.fields]
+        )
 
 
 class PagedJsonReader(_PagedJsonBase, DataSourceReader):

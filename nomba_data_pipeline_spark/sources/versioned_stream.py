@@ -60,26 +60,17 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from nomba_data_pipeline_spark import localmeta
+
 
 def _local(path: str) -> str:
-    p = path
-    if p.startswith("file:"):
-        p = p[len("file:"):]
-        while p.startswith("//"):
-            p = p[1:]
-    if "://" in p:
+    p = localmeta.local_path(path)
+    if p is None:
         raise ValueError(
             f"versioned_cdf reads feed files with pyarrow and supports "
             f"local paths only; got {path!r}"
         )
     return p
-
-
-def _read_json_parquet(path: str) -> dict:
-    """A VersionedTable pointer/manifest: 1-row parquet, column `j`."""
-    import pyarrow.parquet as pq
-
-    return json.loads(pq.read_table(path).column("j")[0].as_py())
 
 
 def _latest_version(root: str) -> int | None:
@@ -93,7 +84,7 @@ def _latest_version(root: str) -> int | None:
     intended latest version."""
     p = os.path.join(root, "_latest")
     if os.path.isdir(p):
-        return int(_read_json_parquet(p)["version"])
+        return int(localmeta.read_json_dir(p)["version"])
     if not os.path.isdir(root):
         return None
     best: int | None = None
@@ -101,9 +92,9 @@ def _latest_version(root: str) -> int | None:
         if not name.startswith("_latest.old-"):
             continue
         try:
-            v = int(_read_json_parquet(os.path.join(root, name))["version"])
-        except Exception:
-            continue
+            v = int(localmeta.read_json_dir(os.path.join(root, name))["version"])
+        except localmeta.SIDECAR_ERRORS:
+            continue  # a backup removed by the writer's swap completing
         if best is None or v > best:
             best = v
     # a backup holds the PRE-swap version: if `_latest` reappeared
@@ -113,11 +104,31 @@ def _latest_version(root: str) -> int | None:
     # consumer that also snapshotted at the new version)
     if os.path.isdir(p):
         try:
-            cur = int(_read_json_parquet(p)["version"])
+            cur = int(localmeta.read_json_dir(p)["version"])
             return cur if best is None else max(cur, best)
-        except Exception:
+        except localmeta.SIDECAR_ERRORS:
             pass
     return best
+
+
+def _nullable_nested(t):
+    """Arrow type `t` with every nested field nullable. The feed files
+    store nested fields as nullable while the table schema may declare
+    them NOT NULL (e.g. a named_struct's fields), and Arrow refuses a
+    nullable -> non-nullable cast; Spark does not check nested
+    nullability of the batches a data source returns."""
+    import pyarrow as pa
+
+    def field(f):
+        return f.with_type(_nullable_nested(f.type)).with_nullable(True)
+
+    if pa.types.is_struct(t):
+        return pa.struct([field(f) for f in t])
+    if pa.types.is_map(t):
+        return pa.map_(t.key_field, field(t.item_field))
+    if pa.types.is_list(t):
+        return pa.list_(field(t.value_field))
+    return t
 
 
 class VersionedCdfDataSource(DataSource):
@@ -134,7 +145,7 @@ class VersionedCdfDataSource(DataSource):
         latest = _latest_version(root)
         if latest is None:
             raise ValueError(f"{root} is not a versioned table (no _latest)")
-        man = _read_json_parquet(
+        man = localmeta.read_json_dir(
             os.path.join(root, "_manifests", f"v{latest:08d}")
         )
         base = StructType.fromJson(json.loads(man["schema"]))
@@ -216,7 +227,7 @@ class VersionedCdfStreamReader(DataSourceStreamReader):
                     "committed version"
                 )
             out.append(v)
-            v = _read_json_parquet(mp)["parent"]
+            v = localmeta.read_json_dir(mp)["parent"]
         return sorted(out)
 
     def partitions(self, start: dict, end: dict):
@@ -248,34 +259,27 @@ class VersionedCdfStreamReader(DataSourceStreamReader):
         return parts
 
     def read(self, partition):
-        version, fpath = partition.value
-        # Arrow fast path (guide §4.2): yield the feed file as ONE
-        # RecordBatch instead of per-row Python tuples — the r16
-        # conversion of the last row-at-a-time Python boundary in the
-        # streaming family. Column alignment (preimage filter, NULL-fill
-        # for post-evolution schemas, the _commit_version constant,
-        # tz-aware -> schema-exact timestamp cast) happens as pyarrow
-        # compute over whole columns. Any surprise falls back to the
-        # original row path below — byte-identical semantics.
-        try:
-            yield from self._read_arrow(version, fpath)
-            return
-        except Exception:
-            pass
-        yield from self._read_rows(version, fpath)
-
-    def _read_arrow(self, version: int, fpath: str):
+        """Yield the feed file as Arrow RecordBatches (one Python->JVM
+        crossing per batch, no per-row tuples). Column alignment — the
+        preimage filter, NULL-fill for columns added after this feed was
+        written, the _commit_version constant and the tz-aware ->
+        schema-exact timestamp cast — is pyarrow compute over whole
+        columns. A feed column whose type cannot be cast to the stream
+        schema raises ArrowInvalid / ArrowNotImplementedError and fails
+        the micro-batch."""
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
+        version, fpath = partition.value
         tbl = pq.read_table(fpath)
         if not self._preimages:
             tbl = tbl.filter(
                 pc.not_equal(tbl.column("change_type"), "update_preimage")
             )
-        want = to_arrow_schema(self.schema)
+        want = pa.schema([f.with_type(_nullable_nested(f.type))
+                          for f in to_arrow_schema(self.schema)])
         have = set(tbl.column_names)
         cols = []
         for field in want:
@@ -287,45 +291,14 @@ class VersionedCdfStreamReader(DataSourceStreamReader):
                 col = tbl.column(field.name)
                 if col.type != field.type:
                     # Spark-written timestamps decode tz-aware UTC; the
-                    # declared arrow type may differ only in tz/unit —
-                    # cast is exact for those, and raises (-> row
-                    # fallback) on anything genuinely incompatible
+                    # declared arrow type may differ only in timestamp
+                    # tz/unit (top-level or nested), for which the cast
+                    # is exact
                     col = col.cast(field.type)
                 cols.append(col)
             else:  # schema evolved after this feed: NULL-fill
                 cols.append(pa.nulls(tbl.num_rows, type=field.type))
         yield from pa.table(cols, schema=want).to_batches()
-
-    def _read_rows(self, version: int, fpath: str):
-        import datetime as _dt
-
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(fpath)
-        have = set(tbl.column_names)
-        names = [f.name for f in self.schema.fields]
-
-        def _norm(v):
-            # Spark-written timestamps decode tz-aware; the Spark-side
-            # converter expects naive-UTC python datetimes
-            if isinstance(v, _dt.datetime) and v.tzinfo is not None:
-                return v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-            return v
-
-        for rec in tbl.to_pylist():
-            # 'update_preimage' rows (r14+ feeds) exist for exact span
-            # folding in diff_versions — stream consumers apply
-            # post-semantics only, same default as changes_between;
-            # include_preimages=true opts in (group-moving updates)
-            if (rec.get("change_type") == "update_preimage"
-                    and not self._preimages):
-                continue
-            yield tuple(
-                version if name == "_commit_version"
-                else _norm(rec.get(name)) if name in have
-                else None  # schema evolved after this feed: NULL-fill
-                for name in names
-            )
 
     def commit(self, end: dict) -> None:
         # offsets live in the stream's checkpoint; feed retention is

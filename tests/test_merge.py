@@ -212,6 +212,33 @@ def test_high_water_mark_stats_matches_scan(spark, tmp_path):
     assert tp.high_water_mark_stats("id") == tp.high_water_mark("id")
     assert tp.high_water_mark_stats("p") == tp.high_water_mark("p")  # fallback
 
+    # a part file written WITHOUT column statistics (another writer's
+    # file): the footer path must fall back, never under-report the HWM
+    import datetime
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tn = ParquetTable(spark, os.path.join(tmp_path, "nostats"))
+    tn.overwrite(df)
+    schema = pq.ParquetFile(
+        sorted(glob.glob(os.path.join(tn.path, "*.parquet")))[0]
+    ).schema_arrow
+    extra = pa.Table.from_pylist(
+        [{"id": 100 + i, "s": f"x{i}", "p": 0,
+          "ts": datetime.datetime(2030, 1, 1 + i, tzinfo=datetime.timezone.utc)}
+         for i in range(3)],
+        schema=schema,
+    )
+    pq.write_table(extra, os.path.join(tn.path, "part-99999-nostats.parquet"),
+                   write_statistics=False)
+    spark.catalog.refreshByPath(tn.path)
+    for col in ("id", "ts"):
+        assert tn.high_water_mark_stats(col) == tn.high_water_mark(col), col
+    assert tn.high_water_mark("id") == 102
+    assert tn.row_count_stats() == tn.read().count() == 53
+
 
 def test_merge_roundtrip_explicit_file_scheme(spark, tmp_path):
     """S8: the writer must be filesystem-scheme-clean — the same code

@@ -7,6 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from nomba_data_pipeline_spark import localmeta
 from nomba_data_pipeline_spark.operators.versioned import VersionedTable
 
 
@@ -1043,8 +1044,7 @@ def test_stats_readback_fallback_when_footers_unreachable(spark, tmp_path, monke
     """When the pyarrow footer path is unavailable (object store), the
     write job computes per-file min/max itself — pruning and the stats
     HWM keep working instead of silently degrading to full scans."""
-    monkeypatch.setattr(VersionedTable, "_file_stats",
-                        lambda self, p, cols: None)
+    monkeypatch.setattr(localmeta, "read_footer", lambda path, cols: None)
     t = _mk(spark, tmp_path, n=50_000, files=8)
     man = t._manifest(1)
     assert all(f.get("stats") and "k" in f["stats"] for f in man["files"])
@@ -1382,8 +1382,7 @@ def test_stats_readback_renders_timestamps_utc_naive(spark, tmp_path, monkeypatc
     like footer stats so delta-bound pruning compares like with like."""
     import datetime as dt
 
-    monkeypatch.setattr(VersionedTable, "_file_stats",
-                        lambda self, p, cols: None)
+    monkeypatch.setattr(localmeta, "read_footer", lambda path, cols: None)
     tz_before = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
@@ -1847,10 +1846,7 @@ def test_unclustered_stats_come_from_write_observation(spark, tmp_path, monkeypa
     generation's bounds ride the write scan itself (df.observe) — the
     readback aggregate must NOT run — and cross-generation pruning
     (the CDC case) still works off those bounds."""
-    monkeypatch.setattr(VersionedTable, "_file_stats",
-                        lambda self, p, cols: None)
-    monkeypatch.setattr(VersionedTable, "_footers_reachable",
-                        lambda self: False)
+    monkeypatch.setattr(localmeta, "local_path", lambda p: None)
 
     def _boom(self, gen, cols, schema):
         raise AssertionError("readback (second scan) must not run for "
@@ -1886,8 +1882,7 @@ def test_unclustered_stats_come_from_write_observation(spark, tmp_path, monkeypa
 def test_clustered_stats_still_exact_per_file(spark, tmp_path, monkeypatch):
     """Clustered generations keep the exact per-file readback — that's
     where per-file tightness pays (intra-generation range pruning)."""
-    monkeypatch.setattr(VersionedTable, "_file_stats",
-                        lambda self, p, cols: None)
+    monkeypatch.setattr(localmeta, "read_footer", lambda path, cols: None)
     t = VersionedTable(spark, os.path.join(str(tmp_path), "tbl"))
     t.overwrite(_base(spark, 50_000), cluster_by=["k"], target_files=8)
     planned = t.read_range("k", lo=0, hi=10).inputFiles()
@@ -2000,11 +1995,9 @@ def test_row_count_answers_from_manifest_metadata(spark, tmp_path):
     # pass that computes the stats
     import json as _json
 
-    real_stats = VersionedTable._file_stats
-    real_rows = VersionedTable._file_rows
+    real_footer = localmeta.read_footer
     try:
-        VersionedTable._file_stats = lambda self, p, cols: None
-        VersionedTable._file_rows = lambda self, p: None
+        localmeta.read_footer = lambda path, cols: None
         t2 = VersionedTable(spark, os.path.join(str(tmp_path), "t2"))
         t2.overwrite(_base(spark, 300), cluster_by=["k"], target_files=3)
         assert all(
@@ -2012,8 +2005,7 @@ def test_row_count_answers_from_manifest_metadata(spark, tmp_path):
         )
         assert t2.row_count() == 300
     finally:
-        VersionedTable._file_stats = real_stats
-        VersionedTable._file_rows = real_rows
+        localmeta.read_footer = real_footer
     # legacy manifest without counts: exact-scan fallback
     md = t._manifest_dir(t.latest_version())
     man_cur = t._manifest(t.latest_version())

@@ -596,3 +596,49 @@ def test_write_cdf_is_a_table_property_not_a_handle_flag(spark, tmp_path):
     flagless.purge_where("k < 3")
     names = os.listdir(t._cdf_dir(flagless.latest_version()))
     assert "_CDF_FULL" in names
+
+
+def test_stream_arrow_read_matches_changes_between_on_rich_types(spark, tmp_path):
+    """The stream reads feed files through Arrow only. Over an
+    overwrite, an upsert, a delete and a later column add, map,
+    array<timestamp>, nested struct, decimal, date, timestamp and
+    timestamp_ntz columns stream exactly what changes_between returns,
+    and the added column streams NULL for feeds written before it."""
+
+    def typed(ids, bump, note=None):
+        df = spark.createDataFrame([(i,) for i in ids], "k long").selectExpr(
+            "k",
+            f"map('x', cast(k as int), 'b', {bump}) as m",
+            f"array(timestamp'2024-01-01 00:00:00' + make_interval(0, 0, 0, cast(k as int)),"
+            f" timestamp'2024-06-01 08:30:00' + make_interval(0, 0, 0, 0, {bump})) as tsa",
+            f"named_struct('a', cast(k as int) + {bump}, 'inner',"
+            " named_struct('s', concat('s', k), 't', timestamp'2024-03-01 12:00:00')) as st",
+            f"cast(k * 1.25 + {bump} as decimal(12,2)) as amt",
+            f"date_add(date'2024-01-01', cast(k as int) + {bump}) as d",
+            f"timestamp'2024-01-01 10:00:00' + make_interval(0, 0, 0, 0, cast(k as int), {bump}) as ts",
+            f"timestamp_ntz'2024-01-01 10:00:00' + make_interval(0, 0, 0, 0, 0, {bump}) as ntz",
+        )
+        return df if note is None else df.withColumn("note", F.lit(note))
+
+    t = VersionedTable(spark, os.path.join(str(tmp_path), "tbl"), write_cdf=True)
+    t.overwrite(typed(range(6), 0).coalesce(1))            # v1
+    t.merge_upsert(typed([2, 3, 10], 7), ["k"])            # v2
+    t.delete_where("k = 4")                                 # v3
+    assert t.evolve_schema_to(typed([0], 0, note="n")) == ["note"]  # v4
+    t.merge_upsert(typed([5], 9, note="late"), ["k"])      # v5
+
+    def as_json(df):
+        cols = sorted(df.columns)
+        return sorted(
+            r[0] for r in df.select(F.to_json(F.struct(*cols))).collect()
+        )
+
+    streamed = _start_stream(spark, t, "vcdf_rich_types")
+    want = t.changes_between(1)
+    assert sorted(streamed.columns) == sorted(want.columns)
+    assert as_json(streamed) == as_json(want)
+    assert len(as_json(streamed)) == 5  # 2 updates + 1 insert, 1 delete, 1 update
+    notes = {(r["_commit_version"], r["k"]): r["note"]
+             for r in streamed.select("_commit_version", "k", "note").collect()}
+    assert notes == {(2, 2): None, (2, 3): None, (2, 10): None,
+                     (3, 4): None, (5, 5): "late"}
