@@ -43,6 +43,13 @@ _SPREAD_MIN_BYTES = int(
 )
 
 
+def max_partition_bytes(spark: SparkSession) -> int:
+    """spark.sql.files.maxPartitionBytes in bytes, as the session's
+    typed conf reads it (so "64m" and "134217728" both parse exactly as
+    the file scan parses them)."""
+    return int(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
+
+
 def _scan_splits(spark: SparkSession, path: str) -> tuple[int, int]:
     """(estimated scan split count, total bytes) for a parquet file or
     directory, from file sizes alone — the same packing arithmetic the
@@ -60,7 +67,7 @@ def _scan_splits(spark: SparkSession, path: str) -> tuple[int, int]:
             )
     else:
         return (1 << 30, 0)  # non-local scheme: assume well-split
-    max_pb = int(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
+    max_pb = max_partition_bytes(spark)
     splits = sum(max(1, -(-s // max_pb)) for s in sizes)
     return (max(1, splits), sum(sizes))
 

@@ -218,13 +218,6 @@ class AggJoinView:
         self._table._stage_and_swap_partitions(
             state, [_BUCKET], [{_BUCKET: b} for b in ids]
         )
-        # an erasure-sized refresh can empty EVERY partial (the view's
-        # all-rows fallback leaves it flat and row-free): a directory
-        # with zero data files is unreadable, so keep the schema
-        # readable as one empty flat file — the same fallback
-        # erase_plain uses; the next build() restores the layout
-        if self._table.file_count() == 0:
-            self._table.overwrite(state.limit(0).repartition(1))
 
     # -- maintenance verbs ---------------------------------------------
     def _exists(self) -> bool:

@@ -404,11 +404,6 @@ class JoinViewTable:
         self._table._stage_and_swap_partitions(
             survivors, [_BUCKET], [{_BUCKET: b} for b in buckets]
         )
-        # every bucket emptied: a table with zero data files is
-        # unreadable — keep the schema readable as one empty flat file
-        # (the same fallback AggJoinView._refresh and erase_plain use)
-        if self._table.file_count() == 0:
-            self._table.overwrite(survivors.limit(0).repartition(1))
         return buckets
 
     def apply_fact_cdf(self, cdf: DataFrame, dim: DataFrame) -> list[int]:

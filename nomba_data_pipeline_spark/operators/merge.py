@@ -24,13 +24,23 @@ rename dance makes any single writer crash-safe and keeps readers off
 half-written data, but two concurrent writers to the same table race
 their swaps (last rename wins; the loser's rows are lost, not
 corrupted). That is the reference's operating model too — one Dagster
-job owns each table (all_jobs.py) — and the runner preserves it (a DAG
-run materializes each model once, sequentially). Cross-TABLE
-parallelism is safe and expected; same-table writers need external
-serialization (a scheduler, or a lock service this engine deliberately
-does not invent). All joins/dedup inside are plain DataFrame ops
-so Catalyst broadcasts the delta side when it is small (the common CDC
-case: a trickle of changes against a huge target). The snapshot mode maps
+job owns each table (all_jobs.py) — and the runner preserves it: a DAG
+run materializes each model once, up to 3 models in flight, but each
+model owns its table and dependency edges serialize every reader
+behind its writer. Cross-TABLE parallelism is safe and expected;
+same-table writers need external serialization (a scheduler, or a lock
+service this engine deliberately does not invent).
+
+Every rewrite of a table's contents goes through this module's two
+replace primitives: `overwrite` (whole table: stage, then `_swap_in`)
+and `_stage_and_swap_partitions` (partition-scoped: stage, then per
+partition rename live -> backup, staged -> live, drop the backups;
+every rename checked, rolled back on failure). A table emptied of every
+partition keeps its schema readable as one empty flat file.
+
+All joins/dedup inside are plain DataFrame ops so Catalyst broadcasts
+the delta side when it is small (the common CDC case: a trickle of
+changes against a huge target). The snapshot mode maps
 to dynamic partition overwrite, which on a cluster touches only the
 partitions present in the incoming batch — no full rewrite at 100 TB.
 """
@@ -44,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nomba_data_pipeline_spark import localmeta
+from nomba_data_pipeline_spark.catalog import max_partition_bytes
 
 
 def fs_and_path(spark: SparkSession, p: str):
@@ -261,6 +272,12 @@ class ParquetTable:
         task count at scale. Parallelism is bounded by distinct partition
         values; extremely hot single partitions would add a salt column
         here (not needed for date-grained layouts).
+
+        A partitioned write of zero rows leaves no data file, and a
+        table without one is unreadable: such a table is written as one
+        empty flat file that keeps the schema (decided from the staged
+        dir's listing; _heal_flat_root clears it when a later scoped
+        write brings partitions back).
         """
         tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
         if partition_by:
@@ -269,6 +286,10 @@ class ParquetTable:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(tmp)
+        if partition_by and next(self._data_files(tmp), None) is None:
+            self.spark.createDataFrame([], df.schema).write.mode(
+                "overwrite"
+            ).parquet(tmp)
         self._swap_in(tmp)
 
     def widen_to(
@@ -385,7 +406,7 @@ class ParquetTable:
         a shuffle.
 
         Partitioned fast path: only partitions touched by the delta are
-        rewritten (dynamic partition overwrite), so a 100-row delta into
+        rewritten (_stage_and_swap_partitions), so a 100-row delta into
         a 100 TB table costs O(touched partitions), not O(table) — the
         property that makes the reference's '~5 sec delta load' hold at
         scale. Affected = partitions of incoming delta rows UNION
@@ -409,8 +430,47 @@ class ParquetTable:
         than narrow silently); after the one-time rewrite, merges carry
         the evolved schema at the usual O(touched) cost.
         """
+
+        def combine(target: DataFrame | None, d: DataFrame) -> DataFrame:
+            if target is None:
+                return d
+            kept = _semi_anti_null_safe(target, d.select(*keys), keys, "left_anti")
+            return kept.unionByName(d)
+
+        return self._merge(
+            delta, keys, partition_by, partition_stable, evolve_schema, combine
+        )
+
+    def _merge(
+        self,
+        delta: DataFrame,
+        keys: list[str],
+        partition_by: list[str] | None,
+        partition_stable: bool,
+        evolve_schema: bool,
+        combine,
+    ) -> list | None:
+        """The one merge routine behind merge_upsert, merge_upsert_dedup and
+        insert_overwrite_partitions. Each supplies only `combine`,
+        which maps (target rows — None when the table is absent —,
+        aligned delta) to the new content of the rewritten scope.
+
+        Absent table: written whole from combine(None, delta).
+        Otherwise evolve_schema first runs widen_to + promote_types,
+        then the target is read ONCE and the delta aligned to it. A
+        flat table is rewritten through overwrite(); a partitioned one
+        only in the partitions the delta touches: the delta's own
+        partitions, plus the partitions that currently hold the delta's
+        keys. Returns those partition-value rows, or None when the whole
+        table was written.
+
+        partition_stable=True declares that a key's partition value never
+        changes (event-time partitions on immutable facts): affected =
+        the delta's own partitions, skipping the key-location scan over
+        the target — at 100 TB that scan (column-pruned but full-table)
+        is the dominant cost of a small merge."""
         if not self.exists():
-            self.overwrite(delta, partition_by=partition_by)
+            self.overwrite(combine(None, delta), partition_by=partition_by)
             return None
         if evolve_schema:
             # widen BEFORE aligning: the one-time rewrite makes the new
@@ -422,16 +482,27 @@ class ParquetTable:
             # cast-to-target lose values silently
             self.widen_to(delta, partition_by=partition_by)
             self.promote_types(delta, partition_by=partition_by)
-        if partition_by:
-            return self._merge_upsert_partitioned(
-                delta, keys, partition_by, partition_stable
-            )
         target = self.read()
         delta = _align_to_target(delta, target)
-        kept = _semi_anti_null_safe(target, delta.select(*keys), keys, "left_anti")
-        merged = kept.unionByName(delta)
-        self.overwrite(merged)
-        return None  # whole table rewritten — no scoped-partition list
+        if not partition_by:
+            self.overwrite(combine(target, delta))
+            return None
+        affected = delta.select(*partition_by)
+        if not partition_stable:
+            # a key whose partition value changed must leave its OLD
+            # partition (null-safe: a NULL-key row's partition must
+            # still be located)
+            affected = affected.unionByName(
+                _semi_anti_null_safe(
+                    target, delta.select(*keys), keys, "left_semi"
+                ).select(*partition_by)
+            )
+        return self._rewrite_partitions(
+            target,
+            affected.dropDuplicates(partition_by),
+            partition_by,
+            lambda target_slice: combine(target_slice, delta),
+        )
 
     def merge_upsert_cdf(
         self,
@@ -615,26 +686,6 @@ class ParquetTable:
             applied.append(bid)
         return applied
 
-    def _merge_upsert_partitioned(
-        self,
-        delta: DataFrame,
-        keys: list[str],
-        partition_by: list[str],
-        partition_stable: bool = False,
-    ) -> list:
-        target = self.read()
-        delta = _align_to_target(delta, target)
-        dkeys = delta.select(*keys).dropDuplicates(keys)
-        return self._merge_scoped_partitions(
-            delta,
-            keys,
-            partition_by,
-            lambda target_slice, d: _semi_anti_null_safe(
-                target_slice, dkeys, keys, "left_anti"
-            ).unionByName(d),
-            partition_stable=partition_stable,
-        )
-
     def insert_overwrite_partitions(
         self, delta: DataFrame, partition_by: list[str]
     ) -> list | None:
@@ -648,66 +699,41 @@ class ParquetTable:
         Cost at 100 TB: one shuffle of the delta (co-locate per
         partition) + O(affected dirs) renames — the target is never
         scanned, unlike merge_upsert's key-location pass. Idempotent:
-        replaying the same delta swaps in identical content. Atomic
-        per partition via the shared stage-then-swap path (never
-        writes into the live directory)."""
-        if not self.exists():
-            self.overwrite(delta, partition_by=partition_by)
-            return None  # whole table written — no scoped-partition list
-        delta = _align_to_target(delta, self.read())
-        affected = delta.select(*partition_by).dropDuplicates(partition_by).collect()
-        if not affected:
-            return []
-        self._stage_and_swap_partitions(delta, partition_by, affected)
-        return affected
+        replaying the same delta swaps in identical content. Each
+        partition is replaced by _stage_and_swap_partitions (never
+        written into in place; every rename checked, a failed one rolls
+        back and raises)."""
+        return self._merge(
+            delta, [], partition_by, partition_stable=True,
+            evolve_schema=False, combine=lambda target, d: d,
+        )
 
-    def _merge_scoped_partitions(
+    def _rewrite_partitions(
         self,
-        delta: DataFrame,
-        keys: list[str],
+        target: DataFrame,
+        affected: DataFrame,
         partition_by: list[str],
-        combine,
-        partition_stable: bool = False,
+        content,
+        sort_cols: list[str] | None = None,
+        target_files: int | None = None,
     ) -> list:
-        """Rewrite only the partitions the delta touches, returning the
-        affected partition-value rows (the maintenance hook downstream
-        materializations — e.g. AggJoinView — scope THEIR refresh by).
-        `combine` maps (target_slice, delta) -> merged content for those
-        partitions.
-
-        partition_stable=True declares that a key's partition value never
-        changes (event-time partitions on immutable facts): affected =
-        the delta's own partitions, skipping the key-location scan over
-        the target — at 100 TB that scan (column-pruned but full-table)
-        is the dominant cost of a small merge. With the default False,
-        key migrations are handled by also rewriting the partitions that
-        currently hold the delta's keys.
-        """
-        target = self.read()
-        delta = _align_to_target(delta, target)
-        dkeys = delta.select(*keys).dropDuplicates(keys)
-        if partition_stable:
-            affected = delta.select(*partition_by).dropDuplicates(partition_by)
-        else:
-            # where delta rows land + where the delta's keys currently live
-            # (null-safe: a NULL-key row's partition must still be located)
-            affected = (
-                delta.select(*partition_by)
-                .unionByName(
-                    _semi_anti_null_safe(target, dkeys, keys, "left_semi").select(
-                        *partition_by
-                    )
-                )
-                .dropDuplicates(partition_by)
-            )
+        """The partition-scoped step of merges, compact() and cluster():
+        collect the `affected` partition-value rows, slice exactly those
+        partitions out of `target`, and swap `content(slice)` in for
+        them. Returns the affected rows ([] when there are none)."""
         affected_rows = affected.collect()
         if not affected_rows:
             return []
         # null-safe: the NULL partition's pre-existing rows must be in the
         # rewrite slice, or the directory swap below would drop them
         target_slice = _semi_anti_null_safe(target, affected, partition_by, "left_semi")
-        merged = combine(target_slice, delta)
-        self._stage_and_swap_partitions(merged, partition_by, affected_rows)
+        self._stage_and_swap_partitions(
+            content(target_slice),
+            partition_by,
+            affected_rows,
+            sort_cols=sort_cols,
+            target_files=target_files,
+        )
         return affected_rows
 
     def _stage_and_swap_partitions(
@@ -718,9 +744,24 @@ class ParquetTable:
         sort_cols: list[str] | None = None,
         target_files: int | None = None,
     ) -> None:
-        """Stage `merged` partitioned in a temp dir (writing straight
-        into self.path would delete input files while the plan still
-        reads them), then swap each affected partition directory in.
+        """Replace exactly the `affected_rows` partitions with `merged`'s
+        rows — the one per-partition replace every scoped writer uses.
+
+        `merged` is staged partitioned in `<table>.tmp-<tag>` (writing
+        straight into self.path would delete input files while the plan
+        still reads them). Then, for each affected partition:
+        (1) the live partition is renamed to a backup under
+        `<table>.old-<tag>/`; (2) the staged partition, if it has rows,
+        is renamed into place; and once every partition is swapped,
+        (3) the backups are deleted. Every rename's result is checked: a
+        failed (false-returning or raising) rename puts the backups of
+        the partitions handled so far back in place and raises, so each
+        partition reads its old rows or its new ones, never neither. A
+        backup that cannot be put back stays where sweep_tmp keeps it.
+        A partition the staging left without rows stays deleted, and a
+        table left with no data file at all keeps its schema readable as
+        one empty flat file (overwrite()'s rule).
+
         `sort_cols` additionally orders rows inside each partition's
         files (cluster()'s within-partition layout). Default layout is
         one task — one file — per partition; `target_files` (cluster of
@@ -728,7 +769,9 @@ class ParquetTable:
         a range repartition on (partition, sort) so a single partition
         splits across tasks into multiple files with disjoint sort-key
         ranges."""
-        tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
+        tag = uuid.uuid4().hex[:8]
+        tmp = f"{self.path}.tmp-{tag}"
+        backup = f"{self.path}.old-{tag}"
         # co-locate per partition before the write (see overwrite())
         if target_files and sort_cols:
             staged = merged.repartitionByRange(
@@ -741,9 +784,8 @@ class ParquetTable:
         staged.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
         # a partition-dir swap into a root that still holds FLAT data
         # files would leave a mixed flat+hive layout Spark's partition
-        # discovery rejects — the shape erase_subject's keep-the-schema
-        # fallback produces (one empty unpartitioned file after an
-        # all-rows erasure). Heal empty residue; refuse real flat data.
+        # discovery rejects — the shape the empty-table rule produces.
+        # Heal empty residue; refuse real flat data.
         self._heal_flat_root()
         fs, _ = self._fs_and_path(self.path)
         jvm = self.spark._jvm
@@ -760,25 +802,50 @@ class ParquetTable:
                 str(value)
             )
 
-        for r in affected_rows:
-            rel = "/".join(f"{c}={part_dir(r[c])}" for c in partition_by)
-            src = jvm_path(f"{tmp}/{rel}")
-            dst = jvm_path(f"{self.path}/{rel}")
-            if fs.exists(dst):
-                fs.delete(dst, True)
-            if fs.exists(src):
-                fs.rename(src, dst)
-            # else: every row of this partition migrated away -> stays deleted
-        fs.delete(jvm_path(tmp), True)
-        self.spark.catalog.refreshByPath(self.path)
+        def rename(src, dst) -> None:
+            fs.mkdirs(dst.getParent())
+            if not fs.rename(src, dst):
+                raise IOError(f"rename {src} -> {dst} failed")
+
+        moved = []  # (live, backup) of each partition renamed aside
+        placed = []  # live partitions now holding staged rows
+        done = False
+        try:
+            for r in affected_rows:
+                rel = "/".join(f"{c}={part_dir(r[c])}" for c in partition_by)
+                live = jvm_path(f"{self.path}/{rel}")
+                if fs.exists(live):
+                    bak = jvm_path(f"{backup}/{rel}")
+                    rename(live, bak)
+                    moved.append((live, bak))
+                src = jvm_path(f"{tmp}/{rel}")
+                if fs.exists(src):
+                    rename(src, live)
+                    placed.append(live)
+            done = True
+        finally:
+            restored = True
+            if not done:
+                for live in placed:
+                    fs.delete(live, True)
+                for live, bak in moved:
+                    restored = fs.rename(bak, live) and restored
+            if restored:
+                fs.delete(jvm_path(backup), True)
+            fs.delete(jvm_path(tmp), True)
+            self.spark.catalog.refreshByPath(self.path)
+        if len(placed) < len(affected_rows) and next(
+            self._data_files(self.path), None
+        ) is None:
+            self.overwrite(self.spark.createDataFrame([], merged.schema))
 
     def _heal_flat_root(self) -> None:
         """Delete EMPTY root-level data files before a partition-scoped
-        swap. An all-rows erasure of a partitioned table keeps the
-        schema readable as one empty unpartitioned file
-        (runner.erase_subject's fallback); the next partitioned write
-        swaps `col=value/` dirs in around it, and the mixed layout
-        makes the table unreadable. Zero-row root files are pure layout
+        swap. A partitioned table emptied of every row keeps its
+        schema readable as one empty unpartitioned file (the empty-table
+        rule of overwrite() and of the partition swap); the next
+        partitioned write swaps `col=value/` dirs in around it, and the
+        mixed layout makes the table unreadable. Zero-row root files are pure layout
         residue — remove them so the swap recreates a clean hive
         layout. NON-empty root files mean the table is genuinely flat:
         a partition-scoped rewrite against it would silently drop the
@@ -808,48 +875,74 @@ class ParquetTable:
 
     # -- maintenance ---------------------------------------------------------
     def sweep_tmp(self) -> int:
-        """Remove orphaned staging directories (`<table>.tmp-*`) left
-        by writes that crashed between staging and swap. Every writer
-        in this class stages into a sibling tmp dir and deletes it
-        after the swap, so any survivor is a crash artifact — never
-        referenced by the live table, safe to drop. Single-writer
-        assumption (same as the writers themselves): don't sweep while
-        a write to THIS table is in flight. Returns dirs removed;
-        pure FS listing of the parent, zero data IO."""
+        """Remove what writes that crashed mid-swap left beside the
+        table. `<table>.tmp-*` staging dirs are never referenced by the
+        live table: always safe to drop. `<table>.old-*` swap backups
+        go only where they cannot be the last copy of data: the backup
+        of a partition (_stage_and_swap_partitions) once that live
+        partition exists, and a backup root once it holds no partition
+        left — so a whole-table backup (_swap_in) goes once the live
+        table exists. In the crash window where the live copy is
+        missing, the backup IS the data: it is left for recovery.
+        Single-writer assumption (same as the writers themselves): don't
+        sweep while a write to THIS table is in flight. Returns dirs
+        removed; pure FS listing, zero data IO."""
         fs, jpath = self._fs_and_path(self.path)
         parent = jpath.getParent()
         if parent is None or not fs.exists(parent):
             return 0
         name = jpath.getName()
-        # .tmp-: staged-but-unswapped writes (always safe to drop);
-        # .old-/.erase-old-: swap backups — only safe once the live
-        # table exists again (in the crash window where the live dir is
-        # missing, the backup IS the data: leave it for recovery);
-        # .erase-tmp-: the closed-history rewrite's out-of-tree staging
+        # .erase-tmp-/.erase-old-: staging and backups of the closed
+        # SCD2 history erasure as earlier versions wrote them
         always = (name + ".tmp-", name + ".erase-tmp-")
-        if_live = (name + ".old-", name + ".erase-old-")
+        backups = (name + ".old-", name + ".erase-old-")
         live = fs.exists(jpath)
         removed = 0
         for st in fs.listStatus(parent):
             n = st.getPath().getName()
-            if n.startswith(always) or (live and n.startswith(if_live)):
+            if n.startswith(always):
                 fs.delete(st.getPath(), True)
                 removed += 1
+            elif live and n.startswith(backups):
+                removed += self._sweep_backup(fs, st.getPath(), jpath)
         return removed
+
+    def _sweep_backup(self, fs, backup, live) -> int:
+        """Delete the partitions of swap backup `backup` whose
+        counterpart under `live` exists, then `backup` itself once it
+        holds no partition dir. Returns the dirs removed."""
+        jvm_path = self.spark._jvm.org.apache.hadoop.fs.Path
+        removed = 0
+        for st in fs.listStatus(backup):
+            p = st.getPath()
+            if st.isDirectory() and "=" in p.getName():
+                twin = jvm_path(live, p.getName())
+                if fs.exists(twin):
+                    removed += self._sweep_backup(fs, p, twin)
+        if not any(
+            st.isDirectory() and "=" in st.getPath().getName()
+            for st in fs.listStatus(backup)
+        ):
+            fs.delete(backup, True)
+            removed += 1
+        return removed
+
+    def _data_files(self, path: str):
+        """Data files (not `_`/`.`-prefixed) under `path`, from one lazy
+        recursive FS listing — so an emptiness probe stops at the first."""
+        fs, jpath = self._fs_and_path(path)
+        it = fs.listFiles(jpath, True)
+        while it.hasNext():
+            p = it.next().getPath()
+            if not p.getName().startswith(("_", ".")):
+                yield p
 
     def file_count(self) -> int:
         """Number of data files backing the table (observability for the
         small-file soak: merge/append cadence must keep this bounded)."""
         if not self.exists():
             return 0
-        fs, jpath = self._fs_and_path(self.path)
-        it = fs.listFiles(jpath, True)
-        n = 0
-        while it.hasNext():
-            name = it.next().getPath().getName()
-            if not name.startswith(("_", ".")):
-                n += 1
-        return n
+        return sum(1 for _ in self._data_files(self.path))
 
     def compact(
         self,
@@ -889,37 +982,13 @@ class ParquetTable:
                 )
             self.overwrite(self.read().coalesce(self._scan_split_count()))
             return
-        self._rewrite_scoped_partitions(partition_by, partition_filter)
-
-    def _rewrite_scoped_partitions(
-        self,
-        partition_by: list[str],
-        partition_filter=None,
-        sort_cols: list[str] | None = None,
-        target_files: int | None = None,
-    ) -> None:
-        """Shared scoping sequence for compact()/cluster(): find the
-        partitions matching `partition_filter`, slice them out with a
-        null-safe semi-join, and stage+swap only those directories."""
         target = self.read()
-        sl = (
-            target.filter(partition_filter)
-            if partition_filter is not None
-            else target
-        )
-        affected = sl.select(*partition_by).dropDuplicates(partition_by)
-        affected_rows = affected.collect()
-        if not affected_rows:
-            return
-        target_slice = _semi_anti_null_safe(
-            target, affected, partition_by, "left_semi"
-        )
-        self._stage_and_swap_partitions(
-            target_slice,
+        scope = target if partition_filter is None else target.filter(partition_filter)
+        self._rewrite_partitions(
+            target,
+            scope.select(*partition_by).dropDuplicates(partition_by),
             partition_by,
-            affected_rows,
-            sort_cols=sort_cols,
-            target_files=target_files,
+            lambda target_slice: target_slice,
         )
 
     def _looks_partitioned(self) -> bool:
@@ -967,15 +1036,7 @@ class ParquetTable:
 
         fs, jpath = self._fs_and_path(self.path)
         size = int(fs.getContentSummary(jpath).getLength())
-        raw = str(
-            self.spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20))
-        ).lower()
-        digits = "".join(c for c in raw if c.isdigit())
-        unit = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}.get(
-            raw.rstrip("b").strip()[-1:], 1
-        )
-        max_pb = int(digits) * unit if digits else 128 << 20
-        return max(1, math.ceil(size / max_pb))
+        return max(1, math.ceil(size / max_partition_bytes(self.spark)))
 
     def cluster(
         self,
@@ -1011,9 +1072,15 @@ class ParquetTable:
         if not self.exists():
             return
         if partition_by:
-            self._rewrite_scoped_partitions(
+            target = self.read()
+            scope = (
+                target if partition_filter is None else target.filter(partition_filter)
+            )
+            self._rewrite_partitions(
+                target,
+                scope.select(*partition_by).dropDuplicates(partition_by),
                 partition_by,
-                partition_filter,
+                lambda target_slice: target_slice,
                 sort_cols=sort_cols,
                 target_files=target_files,
             )
@@ -1029,12 +1096,11 @@ class ParquetTable:
                 "cluster within partitions instead of flattening the layout"
             )
         n = target_files or self._scan_split_count()
-        out = self.read().repartitionByRange(n, *sort_cols).sortWithinPartitions(
-            *sort_cols
+        self.overwrite(
+            self.read().repartitionByRange(n, *sort_cols).sortWithinPartitions(
+                *sort_cols
+            )
         )
-        tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
-        out.write.mode("overwrite").parquet(tmp)
-        self._swap_in(tmp)
 
     def zorder(
         self,
@@ -1098,14 +1164,11 @@ class ParquetTable:
             .withColumn("__zkey", zorder_key("__za", "__zb", bits))
         )
         n = target_files or self._scan_split_count()
-        out = (
+        self.overwrite(
             keyed.repartitionByRange(n, "__zkey")
             .sortWithinPartitions("__zkey")
             .drop("__za", "__zb", "__zkey")
         )
-        tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
-        out.write.mode("overwrite").parquet(tmp)
-        self._swap_in(tmp)
 
     def merge_upsert_dedup(
         self,
@@ -1136,7 +1199,10 @@ class ParquetTable:
         type-promoted first with evolve_schema=True.
         """
 
-        def keep_latest(base: DataFrame) -> DataFrame:
+        def combine(target: DataFrame | None, d: DataFrame) -> DataFrame:
+            base = d.withColumn("__is_delta", F.lit(1))
+            if target is not None:
+                base = target.withColumn("__is_delta", F.lit(0)).unionByName(base)
             value_cols = [c for c in base.columns if c != "__is_delta"]
             w = Window.partitionBy(*keys).orderBy(
                 F.col(tracking_col).desc(),
@@ -1149,36 +1215,9 @@ class ParquetTable:
                 .drop("__rn", "__is_delta")
             )
 
-        if not self.exists():
-            self.overwrite(
-                keep_latest(delta.withColumn("__is_delta", F.lit(1))),
-                partition_by=partition_by,
-            )
-            return
-        if evolve_schema:
-            # same one-time rewrite policy as merge_upsert: widen new
-            # columns, promote widened shared types, refuse narrowing
-            self.widen_to(delta, partition_by=partition_by)
-            self.promote_types(delta, partition_by=partition_by)
-        target = self.read()
-        delta = _align_to_target(delta, target)
-        if partition_by:
-            self._merge_scoped_partitions(
-                delta,
-                keys,
-                partition_by,
-                lambda target_slice, d: keep_latest(
-                    target_slice.withColumn("__is_delta", F.lit(0)).unionByName(
-                        d.withColumn("__is_delta", F.lit(1))
-                    )
-                ),
-                partition_stable=partition_stable,
-            )
-            return
-        base = target.withColumn("__is_delta", F.lit(0)).unionByName(
-            delta.withColumn("__is_delta", F.lit(1))
+        self._merge(
+            delta, keys, partition_by, partition_stable, evolve_schema, combine
         )
-        self.overwrite(keep_latest(base))
 
     def snapshot_append(self, df: DataFrame, derived_col: str = "ingest_date") -> None:
         """O10 snapshot load (base_loader.py:606-677): stamp today's date,

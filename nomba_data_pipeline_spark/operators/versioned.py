@@ -1377,7 +1377,7 @@ class VersionedTable:
         # then input_file_name() tags each candidate row with its source
         # file; the collect is bounded by |touched files| — the same
         # bounded-driver-list shape as the partition scans in
-        # ParquetTable._merge_scoped_partitions
+        # ParquetTable._merge
         candidates, key_bounds = self._key_candidate_files(man, delta, keys)
         tagged = self._read_files(man, sorted(candidates)).withColumn(
             "__vfile", F.input_file_name()

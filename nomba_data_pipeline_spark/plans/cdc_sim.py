@@ -48,14 +48,23 @@ def simulate_user_updates(
 
 
 def simulate_plan_updates(
-    plans: DataFrame, fraction: float = 0.1, seed: int = 42
+    plans: DataFrame, fraction: float = 0.1, seed: int = 42, hwm=None
 ) -> DataFrame:
     """Bump target_amount and updated_at for ~fraction of plans
-    (reference simulate_cdc.py:52-86 updates plan rows + updated_at)."""
+    (reference simulate_cdc.py:52-86 updates plan rows + updated_at).
+
+    `hwm` is the target's current high-water mark on updated_at. Pass it
+    on every call after the first: the source is unchanged between
+    calls, so without it each call stamps the same instant, which
+    equals the HWM the previous call's merge left and fails the
+    strict '>' filter — nothing would merge."""
     pick = F.pmod(F.hash(F.col("plan_id"), F.lit(seed)), F.lit(100)) < int(fraction * 100)
-    # real CDC stamps updated_at = now(); model that as global-max + 1 day so
-    # the rows clear the strict-'>' high-water-mark (SURVEY §7.4.3)
+    # real CDC stamps updated_at = now(); model that as one day past the
+    # later of the source max and the target HWM, so the rows clear the
+    # strict-'>' high-water-mark (SURVEY §7.4.3)
     max_ts = plans.agg(F.max("updated_at")).first()[0]
+    if hwm is not None and (max_ts is None or hwm > max_ts):
+        max_ts = hwm
     return plans.withColumn(
         "target_amount",
         F.when(pick, F.col("target_amount") * 2).otherwise(F.col("target_amount")),

@@ -1217,30 +1217,42 @@ class PipelineRunner:
             bp = bst.getPath()
             if not (bst.isDirectory() and bp.getName().startswith("batch_id=")):
                 continue
-            kept = 0
             for cst in fs.listStatus(bp):
-                cp = cst.getPath()
-                nm = cp.getName()
-                if not (cst.isDirectory() and nm.startswith("close_date=")):
-                    continue
-                if nm[len("close_date="):] < older_than:
-                    fs.delete(cp, True)
+                nm = cst.getPath().getName()
+                if (
+                    cst.isDirectory()
+                    and nm.startswith("close_date=")
+                    and nm[len("close_date="):] < older_than
+                ):
+                    fs.delete(cst.getPath(), True)
                     removed += 1
-                else:
-                    kept += 1
-            if kept == 0:
-                fs.delete(bp, True)
-        # everything expired: remove the root as well, so read_model's
-        # exists() check sees "no closed history" rather than an empty
-        # directory that would fail parquet schema inference
-        if not any(
-            st.isDirectory() and st.getPath().getName().startswith("batch_id=")
-            for st in fs.listStatus(root)
-        ):
-            fs.delete(root, True)
+        self._prune_closed(closed_path)
         if removed:
             self.spark.catalog.refreshByPath(closed_path)
         return removed
+
+    def _prune_closed(self, closed_path: str) -> None:
+        """Drop closed-history batch dirs left without a close_date
+        partition (`_COMMITTED` marker and all), then the root itself
+        when no batch dir is left, so read_model's exists() check sees
+        "no closed history" rather than a directory without data files,
+        which would fail parquet schema inference."""
+        from nomba_data_pipeline_spark.operators.merge import fs_and_path
+
+        fs, root = fs_and_path(self.spark, closed_path)
+
+        def subdirs(p, prefix: str) -> list:
+            return [
+                st.getPath()
+                for st in fs.listStatus(p)
+                if st.isDirectory() and st.getPath().getName().startswith(prefix)
+            ]
+
+        for bp in subdirs(root, "batch_id="):
+            if not subdirs(bp, "close_date="):
+                fs.delete(bp, True)
+        if not subdirs(root, "batch_id="):
+            fs.delete(root, True)
 
     def full_refresh(self, names: list[str]) -> dict[str, int]:
         """dbt `--full-refresh` for a model subgraph: drop the named
@@ -1417,14 +1429,7 @@ class PipelineRunner:
             spec = self.models.get(name)
             n_before = cur.count()
             n_kept = kept.count()
-            if n_kept == 0 and n_before > 0:
-                # an all-rows erasure of a PARTITIONED table would write
-                # zero data files (the dynamic writer emits one file per
-                # partition value), leaving an unreadable directory —
-                # keep the schema readable with one empty unpartitioned
-                # file instead (no data, so no layout to preserve)
-                t.overwrite(kept.repartition(1), partition_by=None)
-            elif n_kept < n_before:
+            if n_kept < n_before:
                 t.overwrite(
                     kept, partition_by=(spec.partition_by or None) if spec else None
                 )
@@ -1503,75 +1508,30 @@ class PipelineRunner:
                     continue
                 kept = kept.join(match_df, col, "left_anti")
             n_before, n_kept = cur.count(), kept.count()
-            touched_buckets: list = []
-            if n_kept == 0 and n_before > 0:
-                if agg is not None:
-                    # intent BEFORE the rewrite (same protocol as the
-                    # apply verbs): a crash between the view fallback
-                    # and the partial mirror heals on the next pass
-                    agg._write_intent([
-                        int(r["__dim_bucket"])
-                        for r in cur.select("__dim_bucket").distinct().collect()
-                    ])
-                # every bucket emptied: removing all dirs would leave an
-                # unreadable table — same schema-keeping fallback as
-                # erase_plain (one empty unpartitioned file)
-                t.overwrite(kept.repartition(1), partition_by=None)
-            elif n_kept < n_before:
+            if n_kept < n_before:
                 gone = cur.join(kept, spec.upsert_key, "left_anti")
                 buckets = [
                     r["__dim_bucket"]
                     for r in gone.select("__dim_bucket").distinct().collect()
                 ]
-                touched_buckets = buckets
                 if agg is not None:
+                    # intent BEFORE the rewrite (same protocol as the
+                    # apply verbs): a crash between the view rewrite and
+                    # the partial refresh heals on the next pass
                     agg._write_intent(buckets)
-                kept_slice = kept.filter(F.col("__dim_bucket").isin(buckets))
-                live = {
-                    r["__dim_bucket"]
-                    for r in kept_slice.select("__dim_bucket").distinct().collect()
-                }
-                if live:
-                    t.insert_overwrite_partitions(kept_slice, ["__dim_bucket"])
-                # dynamic overwrite only replaces partitions PRESENT in
-                # the delta: a bucket emptied of every row must be
-                # deleted explicitly or its subject rows would survive
-                for b in buckets:
-                    if b not in live:
-                        self._rm_dir(
-                            os.path.join(
-                                self.warehouse_dir, vname, f"__dim_bucket={b}"
-                            )
-                        )
-                self.spark.catalog.refreshByPath(
-                    os.path.join(self.warehouse_dir, vname)
+                # the swap deletes a bucket left without rows
+                t._stage_and_swap_partitions(
+                    kept.filter(F.col("__dim_bucket").isin(buckets)),
+                    ["__dim_bucket"],
+                    [{"__dim_bucket": b} for b in buckets],
                 )
-            removed[vname] = n_before - n_kept
-            if agg is not None and n_kept < n_before:
-                from nomba_data_pipeline_spark.operators.incremental_agg import (
-                    agg_state,
-                )
-
-                if n_kept == 0:
-                    # the view fell back to one empty flat file; mirror
-                    # that shape for the partials (an empty PARTITIONED
-                    # overwrite would write no data files and leave the
-                    # state unreadable) — the next build() restores the
-                    # bucketed layout
-                    agg._table.overwrite(
-                        agg_state(
-                            t.read(),
-                            ["__dim_bucket", *agg.group_keys],
-                            agg.measures,
-                            distinct=agg.distinct_cols,
-                        ).repartition(1)
-                    )
-                else:
+                if agg is not None:
                     # recompute exactly the partials of the buckets the
                     # erasure rewrote — same O(touched buckets) bound as
                     # the view's own maintenance
-                    agg._refresh(touched_buckets)
-                agg._clear_intent()
+                    agg._refresh(buckets)
+                    agg._clear_intent()
+            removed[vname] = n_before - n_kept
 
         # versioned marts: a plain delete is NOT an erasure here — time
         # travel and rollback would keep serving the subject from
@@ -1607,75 +1567,27 @@ class PipelineRunner:
                 vt.purge_keys(match_df.select(col), [col])
             removed[name] = n_before - vt.read().count()
 
-        # closed SCD2 history: partition-scoped rewrite
+        # closed SCD2 history: partition-scoped rewrite of exactly the
+        # (batch_id, close_date) partitions holding subject rows
         closed_path = os.path.join(self.warehouse_dir, "users_snapshot__closed")
-        fs, root = fs_and_path(self.spark, closed_path)
+        closed_t = ParquetTable(self.spark, closed_path)
         n_hist = 0
-        if fs.exists(root):
-            affected = (
-                self.spark.read.parquet(closed_path)
-                .join(F.broadcast(ids_df), "user_id", "left_semi")
-                .select(
-                    F.col("batch_id").cast("string"),
-                    F.col("close_date").cast("string"),
-                )
-                .distinct()
-                .collect()
+        if closed_t.exists():
+            from nomba_data_pipeline_spark.operators.merge import (
+                _semi_anti_null_safe,
             )
-            import uuid as _uuid
 
-            for r in affected:
-                part = os.path.join(
-                    closed_path,
-                    f"batch_id={r['batch_id']}",
-                    f"close_date={r['close_date']}",
-                )
-                cur = self.spark.read.parquet(part)
-                kept = cur.join(F.broadcast(ids_df), "user_id", "left_anti")
-                n_before, n_kept = cur.count(), kept.count()
-                n_hist += n_before - n_kept
-                if n_kept == 0:
-                    self._rm_dir(part)
-                elif n_kept < n_before:
-                    # stage OUTSIDE the partitioned tree: an in-tree
-                    # `.tmp-`/`.old-` sibling of a close_date dir would be
-                    # parsed by Hive partition discovery as a real
-                    # partition value, resurrecting supposedly-erased rows
-                    # after a crash mid-rewrite. Same rename-dance window
-                    # as ParquetTable._swap_in.
-                    tag = _uuid.uuid4().hex[:8]
-                    stage = f"{closed_path}.erase-tmp-{tag}"
-                    backup = f"{closed_path}.erase-old-{tag}"
-                    kept.write.mode("overwrite").parquet(stage)
-                    _, spath = fs_and_path(self.spark, stage)
-                    _, ppath = fs_and_path(self.spark, part)
-                    _, bpath = fs_and_path(self.spark, backup)
-                    if not fs.rename(ppath, bpath):
-                        raise IOError(f"rename {part} -> backup failed")
-                    if not fs.rename(spath, ppath):
-                        fs.rename(bpath, ppath)  # roll back
-                        raise IOError(f"rename {stage} -> {part} failed")
-                    fs.delete(bpath, True)
-            # drop batch dirs emptied of every close_date partition
-            for bst in fs.listStatus(root):
-                bp = bst.getPath()
-                if not (
-                    bst.isDirectory() and bp.getName().startswith("batch_id=")
-                ):
-                    continue
-                if not any(
-                    cst.isDirectory()
-                    and cst.getPath().getName().startswith("close_date=")
-                    for cst in fs.listStatus(bp)
-                ):
-                    fs.delete(bp, True)
-            if not any(
-                st.isDirectory() and st.getPath().getName().startswith("batch_id=")
-                for st in fs.listStatus(root)
-            ):
-                fs.delete(root, True)
+            parts = ["batch_id", "close_date"]
+            cur = closed_t.read()
+            hit = cur.join(F.broadcast(ids_df), "user_id", "left_semi")
+            affected = hit.select(*parts).distinct().collect()
             if affected:
-                self.spark.catalog.refreshByPath(closed_path)
+                n_hist = hit.count()
+                kept = _semi_anti_null_safe(
+                    cur, hit.select(*parts), parts, "left_semi"
+                ).join(F.broadcast(ids_df), "user_id", "left_anti")
+                closed_t._stage_and_swap_partitions(kept, parts, affected)
+                self._prune_closed(closed_path)
         removed["users_snapshot__closed"] = n_hist
 
         manifest = {

@@ -90,6 +90,27 @@ def test_cluster_default_sizes_to_scan_splits(spark, tmp_path):
     assert tbl.file_count() == 1
 
 
+def test_scan_split_readers_accept_unit_suffixed_max_partition_bytes(spark, tmp_path):
+    """spark.sql.files.maxPartitionBytes = "64m" is a value Spark's scan
+    accepts; load_table(spread=True) and cluster()'s file sizing read it
+    the same way (64 MiB), instead of failing to parse it."""
+    from nomba_data_pipeline_spark.catalog import load_table, max_partition_bytes
+
+    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "64m")
+    try:
+        assert max_partition_bytes(spark) == 64 << 20
+        orders = load_table(spark, SF_SMALL, "orders", spread=True)
+        src = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
+        assert orders.count() == src.count()
+        tbl = ParquetTable(spark, str(tmp_path / "orders"))
+        tbl.overwrite(src.repartition(4))
+        tbl.cluster(["o_orderkey"])
+        assert tbl.file_count() == 1
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+
+
 def test_cluster_missing_table_is_noop(spark, tmp_path):
     tbl = ParquetTable(spark, str(tmp_path / "absent"))
     tbl.cluster(["k"])  # must not raise

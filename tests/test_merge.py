@@ -379,12 +379,85 @@ def test_sweep_tmp_removes_only_crash_orphans(spark, tmp_path, base_df):
 
 def test_sweep_tmp_keeps_backup_when_live_table_missing(spark, tmp_path, base_df):
     """Crash window where the live dir was renamed away: the .old-
-    backup IS the data — the sweep must leave it for recovery."""
+    backup IS the data — the sweep must leave it for recovery. The same
+    holds per partition: a partition backup whose live partition is
+    missing survives, while one whose live partition exists goes."""
     t = ParquetTable(spark, os.path.join(tmp_path, "gone"))
     os.makedirs(os.path.join(tmp_path, "gone.old-deadbeef"))
     os.makedirs(os.path.join(tmp_path, "gone.tmp-deadbeef"))
     assert t.sweep_tmp() == 1  # tmp swept, backup preserved
     assert os.path.exists(os.path.join(tmp_path, "gone.old-deadbeef"))
+
+    p = ParquetTable(spark, os.path.join(tmp_path, "p"))
+    p.overwrite(base_df, partition_by=["state"])  # state=X, state=Y
+    backup = os.path.join(tmp_path, "p.old-cafe0002")
+    for part in ("state=X", "state=Z"):  # state=Z has no live partition
+        os.makedirs(os.path.join(backup, part))
+        open(os.path.join(backup, part, "part-0.parquet"), "w").close()
+    assert p.sweep_tmp() == 1  # the state=X backup
+    assert not os.path.exists(os.path.join(backup, "state=X"))
+    assert os.path.exists(os.path.join(backup, "state=Z", "part-0.parquet"))
+    assert sorted((r.id, r.state) for r in p.read().collect()) == [
+        (1, "X"), (2, "Y"), (3, "X")
+    ]
+
+
+class _RenameFailsFS:
+    """A Hadoop FileSystem whose Nth rename of a staged (`.tmp-`) path
+    returns false — how Hadoop reports a failed rename — and which
+    otherwise delegates to the real one."""
+
+    def __init__(self, fs, fail_at: int):
+        self._fs = fs
+        self._fail_at = fail_at
+        self.staged_renames = 0
+
+    def rename(self, src, dst):
+        if ".tmp-" in src.toString():
+            self.staged_renames += 1
+            if self.staged_renames == self._fail_at:
+                return False
+        return self._fs.rename(src, dst)
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+
+def test_partition_swap_rename_failure_rolls_back(spark, tmp_path, monkeypatch):
+    """A staged-partition rename that returns false mid-swap raises,
+    and every live partition still reads its pre-merge rows (the
+    partitions already swapped are rolled back, the failed one is
+    restored from its backup); no backup or staging dir is left."""
+    from nomba_data_pipeline_spark.operators import merge as merge_mod
+
+    t = ParquetTable(spark, os.path.join(tmp_path, "t"))
+    schema = "id int, name string, state string, v int"
+    t.overwrite(
+        spark.createDataFrame(
+            [(1, "a", "X", 10), (2, "b", "Y", 10), (3, "c", "Z", 10)], schema
+        ),
+        partition_by=["state"],
+    )
+    before = sorted((r.id, r.name, r.state) for r in t.read().collect())
+    delta = spark.createDataFrame(
+        [(1, "a2", "X", 20), (2, "b2", "Y", 20), (3, "c2", "Z", 20)], schema
+    )
+    real = merge_mod.fs_and_path
+    flaky = {}
+
+    def fs_and_path(spark_, p):
+        fs, jpath = real(spark_, p)
+        wrapped = flaky.setdefault("fs", _RenameFailsFS(fs, fail_at=2))
+        return wrapped, jpath
+
+    monkeypatch.setattr(merge_mod, "fs_and_path", fs_and_path)
+    with pytest.raises(IOError, match="rename"):
+        t.merge_upsert(delta, ["id"], partition_by=["state"])
+    assert flaky["fs"].staged_renames == 2
+    monkeypatch.setattr(merge_mod, "fs_and_path", real)
+    assert sorted((r.id, r.name, r.state) for r in t.read().collect()) == before
+    siblings = [n for n in os.listdir(tmp_path) if n.startswith("t.")]
+    assert siblings == []
 
 
 # ---------------------------------------------------------------------------
@@ -603,8 +676,8 @@ def test_merge_upsert_dedup_evolve_schema(spark, tmp_path, base_df):
 
 
 def test_partition_write_heals_empty_flat_root(spark, tmp_path):
-    """An all-rows erasure keeps a partitioned table readable as ONE
-    empty unpartitioned file (erase_subject's fallback); the next
+    """A partitioned table emptied of every row stays readable as ONE
+    empty unpartitioned file (the empty-table rule); the next
     partition-scoped write must heal that residue instead of swapping
     partition dirs in AROUND it — the mixed flat+hive layout makes the
     table unreadable (ADVICE r11)."""
@@ -615,7 +688,7 @@ def test_partition_write_heals_empty_flat_root(spark, tmp_path):
         [(1, "a", "X", 1), (2, "b", "Y", 1)], "id int, name string, state string, v int"
     )
     t.overwrite(df, partition_by=["state"])
-    # the erase-everything fallback shape: one empty flat file
+    # the empty-table shape: one empty flat file
     t.overwrite(df.limit(0).drop("state").withColumn("state", F.lit(None).cast("string")).repartition(1))
     root_files = [
         f for f in os.listdir(os.path.join(tmp_path, "t"))

@@ -197,3 +197,28 @@ def test_runner_insert_overwrite_materialization(spark, tmp_path):
     state["rows"] = [(5, "a2", "2026-01")]
     runner.run()
     assert _state(t) == [(2, "b", "2026-02"), (5, "a2", "2026-01")]
+
+
+def test_partitioned_merge_reads_target_once(spark, tmp_path, monkeypatch):
+    """A partitioned merge_upsert and merge_upsert_dedup read the
+    target once: key location, slice and alignment share one read
+    (each schema-less read starts a Spark job)."""
+    t = _t(spark, tmp_path, [(1, "a", "2026-01"), (2, "b", "2026-02")])
+    real_read = ParquetTable.read
+    calls = []
+
+    def counting_read(self):
+        calls.append(self.path)
+        return real_read(self)
+
+    monkeypatch.setattr(ParquetTable, "read", counting_read)
+    delta = spark.createDataFrame([(2, "b2", "2026-01"), (3, "c", "2026-03")], SCHEMA)
+    t.merge_upsert(delta, ["id"], partition_by=["m"])
+    assert len(calls) == 1
+    calls.clear()
+    t.merge_upsert_dedup(
+        delta.withColumn("v", F.lit("z")), ["id"], "v", partition_by=["m"]
+    )
+    assert len(calls) == 1
+    monkeypatch.setattr(ParquetTable, "read", real_read)
+    assert _state(t) == [(1, "a", "2026-01"), (2, "z", "2026-01"), (3, "z", "2026-03")]

@@ -107,6 +107,38 @@ def test_cdc_plan_update_flows_to_marts(spark, warehouse):
     assert runner2.table("stg_plans").read().count() == len(before)
 
 
+def test_plan_updates_merge_on_every_generation(spark, warehouse):
+    """Given the target's high-water mark, simulate_plan_updates stamps
+    past it, so a second CDC generation's updated plans merge too (a
+    stamp of max(source) + 1 day equals the HWM the first generation
+    left and fails the strict '>' filter)."""
+    from nomba_data_pipeline_spark.operators.merge import ParquetTable
+
+    stg = ParquetTable(spark, os.path.join(warehouse, "stg_plans"))
+
+    def generation(seed):
+        def source(s, sf):
+            hwm = stg.high_water_mark_stats("updated_at")
+            return simulate_plan_updates(M.stg_plans(s, sf), 0.1, seed=seed, hwm=hwm)
+
+        return {"stg_plans": source}
+
+    build_pipeline(spark, warehouse, SF_SMALL).run(only=["stg_plans"])
+    base = {r.plan_id: r.target_amount for r in stg.read().collect()}
+    for seed in (1, 2):
+        build_pipeline(
+            spark, warehouse, SF_SMALL, source_override=generation(seed)
+        ).run(only=["stg_plans"])
+    picked = {
+        r.plan_id
+        for r in simulate_plan_updates(M.stg_plans(spark, SF_SMALL), 0.1, seed=2).collect()
+        if r.target_amount != base[r.plan_id]
+    }
+    after = {r.plan_id: r.target_amount for r in stg.read().collect()}
+    assert picked and set(after) == set(base)
+    assert {p for p in picked if after[p] != 2 * base[p]} == set()
+
+
 def test_random_sample_seeded_determinism(spark):
     """O3: rand(seed) sampling is reproducible for a fixed input
     partitioning within a session, and draws exactly n distinct rows."""

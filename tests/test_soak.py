@@ -8,6 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from nomba_data_pipeline_spark.operators.merge import ParquetTable
 from nomba_data_pipeline_spark.plans import models as M
 from nomba_data_pipeline_spark.plans.cdc_sim import (
     simulate_plan_updates,
@@ -20,6 +21,13 @@ pytestmark = pytest.mark.skipif(
 )
 
 
+def _plans_hwm(spark, wh):
+    """stg_plans' high-water mark, so each generation's stamps clear it."""
+    return ParquetTable(spark, os.path.join(wh, "stg_plans")).high_water_mark_stats(
+        "updated_at"
+    )
+
+
 def test_sf01_pipeline_three_generations(spark, tmp_path):
     wh = os.path.join(tmp_path, "wh")
     build_pipeline(spark, wh, "/root/testdata/sf0.1").run()
@@ -29,7 +37,7 @@ def test_sf01_pipeline_three_generations(spark, tmp_path):
                 M.stg_users(s, sf), 0.03, seed=g, new_segment=f"G{g}"
             ),
             "stg_plans": lambda s, sf, g=gen: simulate_plan_updates(
-                M.stg_plans(s, sf), 0.02, seed=g
+                M.stg_plans(s, sf), 0.02, seed=g, hwm=_plans_hwm(s, wh)
             ),
         }
         r = build_pipeline(spark, wh, "/root/testdata/sf0.1", source_override=ov)
@@ -56,7 +64,7 @@ def test_twenty_cdc_cycles_no_rerun_degradation(spark, tmp_path):
     for gen in range(1, 21):
         ov = {
             "stg_plans": lambda s, sf, g=gen: simulate_plan_updates(
-                M.stg_plans(s, sf), 0.01, seed=g
+                M.stg_plans(s, sf), 0.01, seed=g, hwm=_plans_hwm(s, wh)
             ),
         }
         t0 = time.perf_counter()
